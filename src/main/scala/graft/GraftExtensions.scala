@@ -4,6 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.types.IntegerType
 
 /** Registers the engine's custom Catalyst expressions as SQL functions,
   * so `spark.sql` users get the same codegen kernels the DataFrame API
@@ -23,6 +24,9 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   *  - `json_render(value)`           -> string  ([[graft.functions.JsonRender]])
   *  - `float_vec_max_abs(a)`         -> float   ([[graft.functions.FloatVecMaxAbs]])
   *  - `quantize_int8(a)`             -> array<tinyint> ([[graft.functions.QuantizeInt8Codes]])
+  *  - `word_ngrams(tokens, n)`       -> array<string> ([[graft.functions.WordNGrams]])
+  *  - `minhash_signature(shingles, k)` -> array<bigint> ([[graft.functions.MinHashSignature]])
+  *  (n and k must be positive integer literals)
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit =
@@ -42,6 +46,12 @@ object GraftExtensions {
     (new FunctionIdentifier(name),
       new ExpressionInfo("graft", name, usage),
       builder)
+  }
+
+  private def positiveIntLiteral(name: String, arg: Expression): Int = arg match {
+    case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, IntegerType) if v >= 1 => v
+    case other => throw new IllegalArgumentException(
+      s"$name requires a positive integer literal, got $other")
   }
 
   private[graft] val registrations = Seq(
@@ -67,7 +77,11 @@ object GraftExtensions {
     one("float_vec_max_abs", "float_vec_max_abs(a) - max |x_i| over a float array's non-null elements (null if none)", 1,
       args => graft.functions.FloatVecMaxAbs(args.head)),
     one("quantize_int8", "quantize_int8(a) - symmetric int8 codes (scale = max_abs/127); pair with float_vec_max_abs for the scale", 1,
-      args => graft.functions.QuantizeInt8Codes(args.head)))
+      args => graft.functions.QuantizeInt8Codes(args.head)),
+    one("word_ngrams", "word_ngrams(tokens, n) - every window of n non-null tokens, space-joined (fewer than n tokens: concat_ws(' ', tokens))", 2,
+      args => graft.functions.WordNGrams(args(0), positiveIntLiteral("word_ngrams", args(1)))),
+    one("minhash_signature", "minhash_signature(shingles, k) - array of k minima, element i = min over shingles of xxhash64(s, i) (empty array: null)", 2,
+      args => graft.functions.MinHashSignature(args(0), positiveIntLiteral("minhash_signature", args(1)))))
 
   /** Register into an already-running session (extensions configs only
     * apply at session construction).

@@ -10,12 +10,12 @@ import org.apache.spark.sql.functions._
   *    combine bounds hot-hash skew.
   *  - MinHash+LSH: shingle -> k minhashes -> b bands; only rows sharing
   *    a band bucket become candidate pairs (candidates << n^2), then
-  *    exact Jaccard verifies. Signatures are computed on the CODEGEN
-  *    path — explode(shingles) + hash-aggregate of k min(xxhash64) —
-  *    because Spark's higher-order array functions are CodegenFallback
-  *    (interpreted): the exploded form measured ~20x faster. The
-  *    aggregation partial-combines map-side, so the shuffle carries one
-  *    k-wide row per document, not one row per shingle.
+  *    exact Jaccard verifies. Shingles and signatures are codegen
+  *    kernels ([[graft.functions.WordNGrams]],
+  *    [[graft.functions.MinHashSignature]]), not Spark's higher-order
+  *    array functions, which are CodegenFallback (interpreted): each
+  *    document yields one k-wide signature row, so the shuffle carries
+  *    one row per document and no per-shingle rows exist at all.
   *  - SimHash: 64-bit fingerprint via token-hash bit voting — same
   *    explode + wide codegen'd conditional-sum aggregation.
   *  - n-gram Jaccard: exact verification metric for candidate pairs.
@@ -36,39 +36,35 @@ object Dedup {
     df.groupBy(md5(col(textCol)).as("content_hash"))
       .agg(min(col(idCol)).as("keep_id"))
 
-  /** Word n-gram shingles as an array column, for arbitrary n >= 1.
-    * O(tokens) per document: the token array is zipped with its own
-    * i-shifted slices, one zip per extra gram position (the naive
-    * transform+slice form is O(tokens^2) per document and interpreted).
-    * zip_with pads the shorter (shifted) side with nulls, which mark the
-    * incomplete tail grams; the final filter drops them. Documents with
-    * fewer than n tokens yield their whole text as the single shingle
-    * (so short docs still participate in Jaccard instead of vanishing).
+  /** Word n-gram shingles as an array column, for arbitrary n >= 1:
+    * every window of n whitespace tokens of the lower-cased, trimmed
+    * text, space-joined. Documents with fewer than n tokens yield their
+    * whole token sequence as the single shingle (so short docs still
+    * participate in Jaccard instead of vanishing); null text yields
+    * null. Tokenization is Spark's own `split(trim(lower(text)), "\\s+")`;
+    * the windows come from the O(tokens) codegen kernel
+    * [[graft.functions.WordNGrams]].
     */
   def shingles(textCol: Column, n: Int = 3): Column = {
     require(n >= 1, s"shingle size must be >= 1, got $n")
-    val toks = split(trim(lower(textCol)), "\\s+")
-    val grams = (1 until n).foldLeft(toks) { (acc, i) =>
-      val shifted = slice(toks, lit(i + 1), greatest(size(toks) - i, lit(0)))
-      zip_with(acc, shifted, (a, b) =>
-        when(a.isNull || b.isNull, lit(null)).otherwise(concat(a, lit(" "), b)))
-    }
-    when(size(toks) < n, array(concat_ws(" ", toks)))
-      .otherwise(filter(grams, g => g.isNotNull))
+    graft.functions.WordNGrams(split(trim(lower(textCol)), "\\s+"), n)
   }
 
-  /** k MinHash signatures as one row per id with columns m0..m(k-1):
-    * explode shingles, then k codegen'd min(xxhash64(shingle, seed))
-    * aggregations (seeds are baked literals — deterministic across runs
-    * and cluster sizes).
+  /** k MinHash signatures as one row per id with columns m0..m(k-1),
+    * m_i = min over the id's shingles of xxhash64(shingle, i) (seeds are
+    * baked literals — deterministic across runs and cluster sizes). Each
+    * row's k minima come from one [[graft.functions.MinHashSignature]]
+    * call; the groupBy merges rows that share an id, one signature row
+    * per document through the shuffle. Docs without shingles (null text)
+    * have no row.
     */
   def minhashSigTable(df: DataFrame, textCol: String, idCol: String, k: Int,
                       shingleN: Int = 3): DataFrame =
-    df.select(col(idCol).as("id"), explode(shingles(col(textCol), shingleN)).as("s"))
+    df.select(col(idCol).as("id"),
+        graft.functions.MinHashSignature(shingles(col(textCol), shingleN), k).as("m"))
+      .filter(col("m").isNotNull)
       .groupBy("id")
-      .agg(
-        min(xxhash64(col("s"), lit(0))).as("m0"),
-        (1 until k).map(seed => min(xxhash64(col("s"), lit(seed))).as(s"m$seed")): _*)
+      .agg(min(col("m")(0)).as("m0"), (1 until k).map(i => min(col("m")(i)).as(s"m$i")): _*)
 
   /** Guard against quadratic blowup in a band self-join: a bucket of n
     * rows yields n^2/2 candidate pairs, and a corpus with thousands of
@@ -139,18 +135,15 @@ object Dedup {
     // exact-Jaccard verification, computed only for surviving candidates.
     // The distinct shingle set is materialized ONCE PER DOC in the
     // projection BELOW the join (guide §2.3: project before the
-    // exchange): the shingle builder rides interpreted higher-order
-    // functions, and inlining it into the pair-level jaccard expression
-    // re-evaluated it up to 3x per pair side (each appearance in the
-    // intersect/union/guard subtrees is a separate interpreted eval —
-    // measured ~2s of minhash_pairs' 3.2s at sf0.1). After the join the
-    // arrays are plain attributes, so the per-pair work is one
-    // array_intersect plus two size() reads.
+    // exchange), so the tokenize+shingle+distinct pass runs once per doc
+    // instead of once per pair side; after the join the arrays are plain
+    // attributes, and the per-pair work is one array_intersect plus two
+    // size() reads.
     // ONE shingle table feeds BOTH join sides (lazy checkpoint — the
     // verify join's first side materializes it inline, the second side
-    // reads the cached blocks): the interpreted tokenize+shingle pass
-    // drops from 2x to 1x here (3x to 2x per call incl. the signature
-    // build). Independent of the sig checkpoint — no lazy-on-lazy chain.
+    // reads the cached blocks). Independent of the sig checkpoint — no
+    // lazy-on-lazy chain. Callers that are done with the pairs release
+    // both checkpoints with GraftSqlBridge.unpersistCheckpoint(pairs).
     val shing = df.select(col(idCol).as("id"),
       array_distinct(shingles(col(textCol), shingleN)).as("sh"))
       .localCheckpoint(eager = false)
@@ -400,6 +393,16 @@ object Dedup {
       .select(col("id"), coalesce(col("comp"), col("id")).as("comp"))
   }
 
+  /** [[connectedComponents]] of LSH pairs, then release the pairs'
+    * signature and shingle checkpoints: the labels read only their own
+    * checkpoint, and nothing else holds the pairs.
+    */
+  private def components(pairs: DataFrame): DataFrame = {
+    val comps = connectedComponents(pairs)
+    org.apache.spark.sql.GraftSqlBridge.unpersistCheckpoint(pairs)
+    comps
+  }
+
   /** Near-duplicate survivors: LSH pairs -> connected components ->
     * keep each component's min-id member plus every unpaired document.
     * Document payloads never enter the component iteration (ids only);
@@ -409,8 +412,7 @@ object Dedup {
   def nearDupSurvivors(df: DataFrame, textCol: String = "text", idCol: String = "doc_id",
                        k: Int = 16, bands: Int = 4, threshold: Double = 0.7,
                        maxBucket: Int = 4096, shingleN: Int = 3): DataFrame = {
-    val comps = connectedComponents(
-      minhashPairs(df, textCol, idCol, k, bands, threshold, maxBucket, shingleN))
+    val comps = components(minhashPairs(df, textCol, idCol, k, bands, threshold, maxBucket, shingleN))
     val losers = comps.filter(col("id") =!= col("comp")).select(col("id").as(idCol))
     df.join(losers, Seq(idCol), "left_anti")
   }
@@ -428,8 +430,7 @@ object Dedup {
                          textCol: String = "text", idCol: String = "doc_id",
                          k: Int = 16, bands: Int = 4, threshold: Double = 0.7,
                          maxBucket: Int = 4096, shingleN: Int = 3): DataFrame = {
-    val comps = connectedComponents(
-      minhashPairs(df, textCol, idCol, k, bands, threshold, maxBucket, shingleN))
+    val comps = components(minhashPairs(df, textCol, idCol, k, bands, threshold, maxBucket, shingleN))
     val scored = df.select(col(idCol).as("id"), score.cast("double").as("__score"))
       .join(comps, "id")
     // min(struct(-score, id)) = (max score, then min id); null scores
@@ -445,11 +446,10 @@ object Dedup {
     df.join(losers, Seq(idCol), "left_anti")
   }
 
-  /** Exact n-gram Jaccard similarity of two shingle arrays. (Expression
-    * evaluation has no common-subexpression elimination on the
-    * interpreted HOF path, so every textual appearance of `a`/`b` here
-    * is a real re-eval — pass cheap inputs, or precompute the distinct
-    * arrays and use [[jaccardDistinct]] as the LSH verify stage does.)
+  /** Exact n-gram Jaccard similarity of two shingle arrays. (`a` and
+    * `b` each appear twice in the expression — pass cheap inputs, or
+    * precompute the distinct arrays and use [[jaccardDistinct]] as the
+    * LSH verify stage does.)
     */
   def jaccard(a: Column, b: Column): Column = {
     val inter = size(array_intersect(array_distinct(a), array_distinct(b))).cast("double")

@@ -218,10 +218,10 @@ object StreamingValidator {
   /** Streaming near-duplicate pairs within the watermark horizon — the
     * stream analogue of [[graft.pipeline.Dedup.minhashPairs]]:
     *
-    *  - the k MinHash values are computed PER ROW with scalar array
-    *    expressions (`array_min(transform(shingles, xxhash64(_, seed)))`
-    *    — numerically identical to the batch explode+min-agg form, but
-    *    STATELESS, so the only stateful operator is the join);
+    *  - the k MinHash values are computed PER ROW by the
+    *    [[graft.functions.MinHashSignature]] kernel the batch signature
+    *    table uses — numerically identical, and STATELESS, so the only
+    *    stateful operator is the join;
     *  - band bucket keys use the same `hash(m_i..)` as batch, so a
     *    stream pair collides exactly when the batch pipeline would
     *    bucket it together;
@@ -258,8 +258,7 @@ object StreamingValidator {
       .filter(col(textCol).isNotNull)
       .withWatermark(tsCol, watermark)
       .withColumn("__sh", graft.pipeline.Dedup.shingles(col(textCol), shingleN))
-      .withColumn("__ms", array((0 until k).map(seed =>
-        array_min(transform(col("__sh"), s => xxhash64(s, lit(seed))))): _*))
+      .withColumn("__ms", graft.functions.MinHashSignature(col("__sh"), k))
     val bandVals = (0 until bands).map { b =>
       hash((b * rpb until (b + 1) * rpb).map(i => col("__ms").getItem(i)): _*)
     }

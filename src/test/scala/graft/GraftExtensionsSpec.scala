@@ -77,6 +77,29 @@ class GraftExtensionsSpec extends AnyFlatSpec with Matchers {
     r(2).isNullAt(1) shouldBe true
   }
 
+  it should "expose word_ngrams and minhash_signature to spark.sql (positive literal sizes)" in {
+    val r = spark.sql(
+      """SELECT word_ngrams(t, 2) AS g, minhash_signature(word_ngrams(t, 2), 3) AS m
+        |FROM VALUES (array('a', 'b', 'c')), (array('solo')), (CAST(NULL AS ARRAY<STRING>)) AS v(t)
+        |""".stripMargin).collect()
+    r(0).getSeq[String](0) shouldBe Seq("a b", "b c")
+    r(1).getSeq[String](0) shouldBe Seq("solo") // fewer than n tokens: the whole sequence
+    r(2).isNullAt(0) shouldBe true
+    r(2).isNullAt(1) shouldBe true
+    // element i is min over shingles of xxhash64(s, i), the batch signature
+    val want = spark.sql(
+      "SELECT array(least(xxhash64('a b', 0), xxhash64('b c', 0)), " +
+        "least(xxhash64('a b', 1), xxhash64('b c', 1)), least(xxhash64('a b', 2), xxhash64('b c', 2)))")
+      .collect().head.getSeq[Long](0)
+    r(0).getSeq[Long](1) shouldBe want
+    spark.sql("SELECT minhash_signature(CAST(array() AS ARRAY<STRING>), 4)").collect().head.isNullAt(0) shouldBe true
+    for (bad <- Seq("word_ngrams(array('a'), 0)", "word_ngrams(array('a'), CAST(2 AS BIGINT))",
+      "minhash_signature(array('a'), length('ab'))", "minhash_signature(array('a'), -1)")) {
+      val e = intercept[Exception](spark.sql(s"SELECT $bad").collect())
+      withClue(bad)(e.getMessage should include("positive integer literal"))
+    }
+  }
+
   it should "apply the same registrations through the extensions class" in {
     // the config route (spark.sql.extensions) drives this same instance;
     // verify the injector enumerates every registration without error
@@ -84,7 +107,7 @@ class GraftExtensionsSpec extends AnyFlatSpec with Matchers {
     val ext = new org.apache.spark.sql.SparkSessionExtensions
     new GraftExtensions()(ext) // must not throw
     GraftExtensions.registrations.map(_._1.funcName) should contain allOf
-      ("rolling_hash", "float_vec_dot")
+      ("rolling_hash", "float_vec_dot", "word_ngrams", "minhash_signature")
     captured // (silence unused warning pattern)
     succeed
   }

@@ -267,6 +267,26 @@ class PlanSpec extends AnyFlatSpec with Matchers {
     dirty.columns should contain("tags") // the fixture actually carries the arrays
   }
 
+  it should "leave no CodegenFallback and no Generate in the LSH signature path" in {
+    import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+    import org.apache.spark.sql.execution.GenerateExec
+    val pool = graft.SparkEntry.dedupPool(spark, sfDir)
+    def fallbacks(df: org.apache.spark.sql.DataFrame) =
+      df.queryExecution.sparkPlan.flatMap(_.expressions)
+        .flatMap(_.collect { case e: CodegenFallback => e.prettyName }).distinct
+    // the pairs plan reads its signature and shingle tables through
+    // localCheckpoints, so it shows neither table's expressions: those
+    // two subtrees are checked on their own plans below
+    val pairs = graft.pipeline.Dedup.minhashPairs(pool, k = 24, bands = 12, threshold = 0.5)
+    withClue("minhashPairs: ")(fallbacks(pairs) shouldBe empty)
+    val sig = graft.pipeline.Dedup.minhashSigTable(pool, "text", "doc_id", 24)
+    withClue("signature table: ")(fallbacks(sig) shouldBe empty)
+    // one k-wide signature row per document: no explode into shingle rows
+    sig.queryExecution.sparkPlan.collect { case g: GenerateExec => g } shouldBe empty
+    val shing = pool.select(array_distinct(graft.pipeline.Dedup.shingles(col("text"))))
+    withClue("verify shingle table: ")(fallbacks(shing) shouldBe empty)
+  }
+
   it should "keep boilerplate removal window-free with a census anti-join (round 5)" in {
     val plan = graft.SparkEntry.queries("boilerplate_removal")(spark, sfDir)
       .queryExecution.sparkPlan.toString

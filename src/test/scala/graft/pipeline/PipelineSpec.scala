@@ -113,6 +113,34 @@ class PipelineSpec extends AnyFlatSpec with Matchers {
     } finally pool.unpersist()
   }
 
+  it should "hold no persisted blocks after the call beyond the result's own" in {
+    val pool = graft.SparkEntry.dedupPool(spark, sfDir).cache()
+    try {
+      pool.count()
+      val sc = spark.sparkContext
+      val before = sc.getPersistentRDDs.keySet
+      def ownRdds(df: org.apache.spark.sql.DataFrame): Set[Int] =
+        df.queryExecution.analyzed.collectLeaves().collect {
+          case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.id
+        }.toSet
+      for (survivors <- Seq(
+          () => Dedup.nearDupSurvivors(pool, k = 24, bands = 12, threshold = 0.5),
+          () => Dedup.nearDupSurvivorsBy(pool,
+            org.apache.spark.sql.functions.length(col("text")), k = 24, bands = 12,
+            threshold = 0.5))) {
+        val result = survivors()
+        result.count()
+        val held = sc.getPersistentRDDs.keySet -- before
+        // the result reads only the component labels' checkpoint: the
+        // signature, shingle and edge checkpoints have been released
+        held shouldBe ownRdds(result) -- before
+        held.size shouldBe 1
+        org.apache.spark.sql.GraftSqlBridge.unpersistCheckpoint(result)
+        sc.getPersistentRDDs.keySet shouldBe before
+      }
+    } finally pool.unpersist()
+  }
+
   "Dedup.nearDupSurvivorsBy" should "keep the best-scoring member per cluster" in {
     val pool = graft.SparkEntry.dedupPool(spark, sfDir).cache()
     try {
